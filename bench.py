@@ -132,9 +132,9 @@ def run_suite(cores: int, sf_dir: str, n_docs: int, build_only: bool = False,
         spark.stop()
         return out
 
-    # ---- query latency over the pages index (cached searcher) ----
-    s = SparkSearcher(spark, idx, cache=True)
-    s.search("warmup", k=1, with_url=False).collect()  # materialize cache untimed
+    # ---- query latency over the pages index ----
+    s = SparkSearcher(spark, idx)
+    s.search("warmup", k=1, with_url=False).collect()  # untimed warm-up
     # derive query terms from the corpus vocabulary deterministically
     from lucene_solr_spark.analysis import tokenize_series
     import pandas as pd

@@ -4,16 +4,21 @@ Execution restates the reference's per-segment search lifecycle in Spark
 (search/IndexSearcher.java:507-522 + the fork's ParallelSearchStrategy,
 search/ParallelSearchStrategy.java:38-137):
 
-  1. rewrite/parse the query (query.py)
-  2. pull *global* statistics before per-segment execution: one tiny
-     aggregation over the postings rows of the query terms
-     (IndexSearcher.collectionStatistics/termStatistics, :597-625) — the
-     rows are term-predicate-pushed into the Parquet scan, so row-group
-     min/max on the term-sorted postings files plays BlockTree's role
-  3. per-segment scoring: groupBy(segment file).applyInPandas — one leaf,
-     one task, mergeable per-leaf top-k state exactly like the fork's
-     CollectionState (TopScoreDocCollector.java:331-379). Inside the UDF
-     everything is numpy over decoded posting blocks:
+  1. plan once (SparkSearcher._plan -> QueryPlan): parse, multiterm rewrite
+     of q and fq, the prune decision, *global* term statistics
+     (IndexSearcher.collectionStatistics/termStatistics, :597-625), idf and
+     clause weights, and the zero-df short-circuit. Statistics come from a
+     Spark aggregation over the postings (distributed) or pyarrow reads
+     (resident), cached per searcher either way
+  2. schedule the per-segment step: one leaf, one task — a Spark task per
+     segment directory (distributed) or a driver thread (resident). The
+     step is always the same: read the segment's postings for the plan's
+     terms with one pyarrow reader (term-in filter pruning row groups of
+     the term-sorted file, which plays BlockTree's role), then run the
+     kernel. No postings scan, no shuffle: only the kernel's mergeable
+     per-leaf top-k state leaves the task, exactly like the fork's
+     CollectionState (TopScoreDocCollector.java:331-379)
+  3. the kernel (_score_segment) is numpy over decoded posting blocks:
        - conjunctions: rarest-first leapfrog via skip-list selective block
          decode (ConjunctionScorer.java:57-100 + Lucene41SkipReader)
        - disjunctions: exact MaxScore/block-max pruning — clauses whose
@@ -25,7 +30,8 @@ search/ParallelSearchStrategy.java:38-137):
          oracle; BM25Similarity.java:222-237)
   4. global merge: per-segment top-k rows -> orderBy(score desc, docid asc)
      LIMIT k (Spark TakeOrderedAndProject — Solr's mergeIds,
-     solr/core/.../handler/component/QueryComponent.java:887-923)
+     solr/core/.../handler/component/QueryComponent.java:887-923; the
+     resident path sorts the same keys in pandas)
   5. two-phase field fetch: only the winning docids join back to the docmap
      (GET_FIELDS stage, QueryComponent.java:626-655) via a broadcast join,
      so document bodies never shuffle.
@@ -36,6 +42,7 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -115,6 +122,49 @@ def _read_field_norms(
     raise KeyError(f"segment {seg_dir} has no field {field!r}")
 
 
+def _read_postings(seg_dir: str, terms: list[str], need_pos: bool) -> pd.DataFrame:
+    """One segment's postings rows for ``terms``: a direct pyarrow read
+    whose term-in filter prunes row groups of the term-sorted file. The
+    only postings reader of the per-segment step, on the driver and on
+    executors alike."""
+    import pyarrow.parquet as pq
+
+    cols = [
+        "segment_id", "term", "df", "ttf", "blocks", "skip_last",
+        "skip_off", "skip_max_tf", "skip_max_norm",
+    ]
+    # positions ride only when a phrase or span needs them (the .doc/.pos
+    # file split of the reference codec)
+    if need_pos:
+        cols += ["positions", "skip_pos_off"]
+    t = pq.read_table(
+        os.path.join(seg_dir, "postings.parquet"),
+        columns=cols,
+        filters=[("term", "in", terms)],
+    )
+    return t.to_pandas()
+
+
+@dataclass
+class QueryPlan:
+    """A query prepared once by SparkSearcher._plan: everything the
+    per-segment kernel needs, picklable so either scheduler can ship it."""
+
+    q: Query
+    fqq: Query | None  # filter query (Solr fq), rewritten
+    terms: list[str]  # postings to read: q's and fqq's terms
+    need_pos: bool  # a phrase clause needs the positions columns
+    seg_meta: dict
+    wv: list  # per-clause weight values (_weights_for)
+    cache: np.ndarray  # BM25 norm cache for the index avgdl
+    k: int
+    prune: bool
+    after: tuple | None = None  # searchAfter (score, docid)
+    count_only: bool = False  # one row per segment: (-1, hit count)
+    all_hits: bool = False  # every match, not the top k
+    fq_docids: object = None  # filterCache set: sorted global docids
+
+
 class _Row:
     """Decoded-on-demand postings row for one (segment, term)."""
 
@@ -124,7 +174,7 @@ class _Row:
     def __init__(self, r: pd.Series):
         self.df = int(r["df"])
         self.blocks = r["blocks"]
-        # positions are column-pruned out of the scan for position-free
+        # positions are column-pruned out of the read for position-free
         # queries (the .doc/.pos file split of the reference codec)
         self.positions = r["positions"] if "positions" in r else b""
         self.skip_last = np.asarray(r["skip_last"], dtype=np.int64)
@@ -225,23 +275,9 @@ class _Row:
         return np.split(flat, np.cumsum(counts)[:-1])
 
 
-def _score_segment(
-    pdf: pd.DataFrame,
-    q: Query,
-    seg_meta: dict,
-    wv_by_clause: list,
-    idf_by_term: dict,
-    cache: np.ndarray,
-    k: int,
-    prune: bool,
-    after: tuple | None = None,
-    count_only: bool = False,
-    fqq: Query | None = None,
-    all_hits: bool = False,
-    fset_bc=None,
-) -> pd.DataFrame:
-    seg_name = pdf["segment_id"].iloc[0]
-    meta = seg_meta[seg_name]
+def _score_segment(plan: QueryPlan, pdf: pd.DataFrame) -> pd.DataFrame:
+    q, wv_by_clause, cache, k = plan.q, plan.wv, plan.cache, plan.k
+    meta = plan.seg_meta[pdf["segment_id"].iloc[0]]
     norms = _read_norms(meta["dir"])
     doc_base = meta["doc_base"]
 
@@ -256,14 +292,15 @@ def _score_segment(
     # pruning threshold sees it (a post-hoc intersection would make MaxScore
     # demote against unfiltered scores and drop true top-k docs) ----
     fset: np.ndarray | None = None
-    if fqq is not None:
-        fset = _filter_docset(fqq, rows, meta["max_doc"])
+    if plan.fqq is not None:
+        fset = _filter_docset(plan.fqq, rows, meta["max_doc"])
         if len(fset) == 0:
             return _empty_pdf()
-    if fset_bc is not None:
+    if plan.fq_docids is not None:
         # filterCache path: slice this segment's range out of the cached
         # GLOBAL docid set (sorted), rebase to local ids
-        g = fset_bc.value if hasattr(fset_bc, "value") else fset_bc
+        g = plan.fq_docids
+        g = g.value if hasattr(g, "value") else g
         lo = int(np.searchsorted(g, doc_base))
         hi = int(np.searchsorted(g, doc_base + meta["max_doc"]))
         local = g[lo:hi] - doc_base
@@ -351,7 +388,7 @@ def _score_segment(
             if c.kind == "term":
                 ubs[i] = float(rows[c.terms[0]].ub(cache, wv_by_clause[i]))
             elif c.kind == "bool":
-                # nested groups disable pruning (search() forces
+                # nested groups disable pruning (_plan forces
                 # prune=False); 0 only orders the accumulation
                 ubs[i] = 0.0
             elif c.kind == "term_set":
@@ -394,7 +431,7 @@ def _score_segment(
         for pos_i, i in enumerate(order):
             rest = order[pos_i:]
             rest_ub = sum(ubs[j] for j in rest)
-            if prune and len(acc_ids) >= k:
+            if plan.prune and len(acc_ids) >= k:
                 theta = float(np.partition(acc_sc, len(acc_sc) - k)[len(acc_sc) - k])
                 # float-summation slack (MaxScoreSumPropagator semantics,
                 # search/MaxScoreSumPropagator.java:60-74): true scores are
@@ -508,18 +545,18 @@ def _score_segment(
     if q.min_should_match:
         keep &= opt_count >= q.min_should_match
     cand_ids, total = cand_ids[keep], total[keep]
-    if after is not None and len(cand_ids):
-        a_s, a_d = np.float32(after[0]), np.int64(after[1])
+    if plan.after is not None and len(cand_ids):
+        a_s, a_d = np.float32(plan.after[0]), np.int64(plan.after[1])
         m = (total < a_s) | ((total == a_s) & (cand_ids + doc_base > a_d))
         cand_ids, total = cand_ids[m], total[m]
-    if count_only:
+    if plan.count_only:
         return pd.DataFrame(
             {"docid": np.array([-1], np.int64),
              "score": np.array([len(cand_ids)], np.float32)}
         )
     if len(cand_ids) == 0:
         return _empty_pdf()
-    if all_hits:
+    if plan.all_hits:
         # full DocSet (SolrIndexSearcher.getDocSet): every match, doc order
         return pd.DataFrame(
             {"docid": (cand_ids + doc_base).astype(np.int64),
@@ -985,19 +1022,12 @@ def _empty_pdf() -> pd.DataFrame:
 
 
 class SparkSearcher:
-    """Searcher over a manifest snapshot.
-
-    ``cache=True`` persists the postings DataFrame in executor memory —
-    the SolrIndexSearcher caching layer (solr/core/.../search/
-    SolrIndexSearcher.java:151-154) restated as Spark block-manager
-    caching; repeated queries then scan memory instead of parquet.
-    """
+    """Searcher over a manifest snapshot."""
 
     def __init__(
         self,
         spark: SparkSession,
         index_dir: str,
-        cache: bool = False,
         generation: int | None = None,
     ):
         self.spark = spark
@@ -1031,11 +1061,11 @@ class SparkSearcher:
             }
             postings_paths.append(os.path.join(d, "postings.parquet"))
             docmap_paths.append(os.path.join(d, "docmap.parquet"))
-        # no input_file_name() column: it is nondeterministic and blocks
+        # the dictionary and term-statistics scans; search operators read
+        # postings per segment instead (_map_segments). No
+        # input_file_name() column: it is nondeterministic and blocks
         # predicate pushdown; segments carry an explicit segment_id column
         self._postings = spark.read.parquet(*postings_paths)
-        if cache:
-            self._postings = self._postings.persist()
         self._docmap_paths = docmap_paths
         # term-stats cache: a searcher is bound to one immutable manifest
         # generation, so global df per term never changes — repeated terms
@@ -1099,6 +1129,46 @@ class SparkSearcher:
         dismax_tie switches clause combination from BooleanQuery sum to
         DisjunctionMaxQuery max + tie * rest (DisjunctionMaxQuery.java:45-54).
         """
+        plan = self._plan(
+            query, k, mode, prune, after, min_should_match, fq, fq_docids,
+            dismax_tie, multiterm_scoring, _count_only, _all_hits,
+        )
+        if plan is None:
+            return self.spark.createDataFrame(
+                [], "rank int, docid long" + (", url string" if with_url else "")
+                + ", score float",
+            )
+        partial = self._map_segments(
+            lambda pdf: _score_segment(plan, pdf), plan.terms, plan.need_pos,
+            RESULT_SCHEMA,
+        )
+        if _count_only:
+            return partial.agg(
+                F.sum(F.col("score").cast("long")).alias("total_hits")
+            )
+        if _all_hits:
+            return partial.select("docid", "score").orderBy("docid")
+        return self._ranked(partial, k, with_url)
+
+    def _plan(
+        self,
+        query: str | Query,
+        k: int = 10,
+        mode: str = "OR",
+        prune: bool = True,
+        after: tuple | None = None,
+        min_should_match: int = 0,
+        fq: str | Query | None = None,
+        fq_docids=None,
+        dismax_tie: float | None = None,
+        multiterm_scoring: bool = False,
+        count_only: bool = False,
+        all_hits: bool = False,
+        resident: bool = False,
+    ) -> QueryPlan | None:
+        """Prepare a query once for either scheduler; None means the result
+        is empty. ``resident`` takes dictionary rewrites and term statistics
+        from driver-side pyarrow reads instead of Spark jobs."""
         q = (parse_query(query, mode, analyzer=self.analyzer)
              if isinstance(query, str) else query)
         if min_should_match:
@@ -1106,8 +1176,8 @@ class SparkSearcher:
         if dismax_tie is not None:
             q.dismax_tie = dismax_tie
         if (
-            after is not None or q.min_should_match or _count_only
-            or q.dismax_tie is not None or _all_hits
+            after is not None or q.min_should_match or count_only
+            or q.dismax_tie is not None or all_hits
             or _query_has(q, ("bool", "fuzzy"))
         ):
             # nested groups score recursively in the rescore phase; the
@@ -1115,50 +1185,32 @@ class SparkSearcher:
             # pruning is disabled (CommonTermsQuery-style adaptivity still
             # applies to flat queries)
             prune = False
-        spark = self.spark
-        empty = spark.createDataFrame(
-            [], "rank int, docid long" + (", url string" if with_url else "") + ", score float"
-        )
         if not q.clauses:
-            return empty
+            return None
         if _query_has(q, ("wildcard", "regexp", "fuzzy")):
             if multiterm_scoring:
                 prune = False  # scored expansions become nested groups
-            q = self._rewrite_multiterm(q, scoring=multiterm_scoring)
+            q = self._rewrite_multiterm(
+                q, resident=resident, scoring=multiterm_scoring
+            )
             if q is None:
-                return empty
+                return None
         fqq = (parse_query(fq, "AND", analyzer=self.analyzer)
                if isinstance(fq, str) else fq)
         if fqq is not None and _query_has(fqq, ("wildcard", "regexp", "fuzzy")):
-            fqq = self._rewrite_multiterm(fqq)
+            fqq = self._rewrite_multiterm(fqq, resident=resident)
             if fqq is None:
-                return empty
+                return None
 
         terms = sorted(
             set(q.all_terms) | (set(fqq.all_terms) if fqq is not None else set())
         )
-        prows = self._postings.where(F.col("term").isin(terms))
-        # prune the positions columns unless a phrase clause needs them:
-        # cuts both the parquet scan and the Arrow transfer into the UDF
-        needs_pos = _query_has(q, ("phrase",)) or (
-            fqq is not None and _query_has(fqq, ("phrase",))
+        # global statistics (collectionStatistics/termStatistics), served
+        # from the searcher-lifetime cache where possible
+        stats = (
+            self._term_stats_resident(terms) if resident
+            else self._term_stats(terms)
         )
-        if not needs_pos:
-            prows = prows.select(
-                "segment_id", "term", "df", "ttf", "blocks", "skip_last",
-                "skip_off", "skip_max_tf", "skip_max_norm",
-            )
-
-        # stage 1: global statistics (collectionStatistics/termStatistics),
-        # served from the searcher-lifetime cache where possible
-        stats = self._term_stats(terms)
-        idf_by_term = {
-            t: bm25.idf(stats.get(t, 0), self.max_doc) for t in terms
-        }
-        wv_by_clause = _weights_for(q, idf_by_term)
-        avgdl = bm25.avg_field_length(self.sum_ttf, self.max_doc)
-        cache = bm25.norm_cache(avgdl)
-
         # required clause with zero global df -> no results (TermQuery semantics)
         for c in q.clauses:
             if c.required:
@@ -1166,40 +1218,62 @@ class SparkSearcher:
                     continue  # nested: evaluated per segment
                 if c.kind == "term_set":
                     if all(stats.get(t, 0) == 0 for t in c.terms):
-                        return empty
+                        return None
                 elif c.kind == "phrase" and getattr(c, "alts", None):
                     if any(
                         all(stats.get(t, 0) == 0 for t in sl) for sl in c.alts
                     ):
-                        return empty
+                        return None
                 elif any(stats.get(t, 0) == 0 for t in c.terms):
-                    return empty
+                    return None
+        idf_by_term = {
+            t: bm25.idf(stats.get(t, 0), self.max_doc) for t in terms
+        }
+        return QueryPlan(
+            q=q, fqq=fqq, terms=terms,
+            need_pos=_query_has(q, ("phrase",)) or (
+                fqq is not None and _query_has(fqq, ("phrase",))
+            ),
+            seg_meta=self.seg_meta,
+            wv=_weights_for(q, idf_by_term),
+            cache=bm25.norm_cache(
+                bm25.avg_field_length(self.sum_ttf, self.max_doc)
+            ),
+            k=k, prune=prune, after=after, count_only=count_only,
+            all_hits=all_hits, fq_docids=fq_docids,
+        )
 
-        seg_meta = self.seg_meta
-        qq, wv, idfs, cch, kk, pr = q, wv_by_clause, idf_by_term, cache, k, prune
-        aft, cnt, fqc, allh, fbc = after, _count_only, fqq, _all_hits, fq_docids
+    def _map_segments(
+        self, kernel, terms: list[str], need_pos: bool, schema: str
+    ) -> DataFrame:
+        """Distributed scheduler: one Spark task per segment directory. The
+        task reads its own segment's postings for ``terms`` and runs
+        ``kernel`` on them when any exist; only the kernel's output leaves
+        the task (no postings scan, no shuffle)."""
+        dirs = [m["dir"] for m in self.seg_meta.values()]
 
-        def run(key, pdf):
-            return _score_segment(
-                pdf, qq, seg_meta, wv, idfs, cch, kk, pr, aft, cnt, fqc, allh,
-                fbc,
-            )
+        def run(batches):
+            for b in batches:
+                for i in b["id"]:
+                    pdf = _read_postings(dirs[i], terms, need_pos)
+                    if len(pdf):
+                        yield kernel(pdf)
 
-        # stage 2: per-segment partial top-k (parallel leaves, mergeable state)
-        partial = prows.groupBy("segment_id").applyInPandas(run, RESULT_SCHEMA)
-        if _count_only:
-            return partial.agg(
-                F.sum(F.col("score").cast("long")).alias("total_hits")
-            )
-        if _all_hits:
-            return partial.select("docid", "score").orderBy("docid")
+        return self.spark.range(0, len(dirs), 1, len(dirs)).mapInPandas(
+            run, schema
+        )
 
-        # stage 3: global merge (TakeOrderedAndProject) + rank
+    def _ranked(
+        self, partial: DataFrame, k: int, with_url: bool = False
+    ) -> DataFrame:
+        """Global merge of per-segment partial top-k rows
+        (TakeOrderedAndProject) plus a 1-based rank; ``with_url`` fetches
+        the winners' urls from the docmap (broadcast join)."""
+        from pyspark.sql import Window
+
         topk = partial.orderBy(F.desc("score"), F.asc("docid")).limit(k)
         if with_url:
             topk = self.docmap().join(F.broadcast(topk), "docid", "inner")
-        from pyspark.sql import Window
-
         # single-partition by design: only <= k already-merged rows reach
         # this window (the constant key is folded away by Catalyst; the
         # WindowExec notice is silenced at the logger in session.py)
@@ -1259,13 +1333,17 @@ class SparkSearcher:
 
         sc = self.spark.sparkContext
         group = f"search-timeout-{uuid.uuid4().hex[:8]}"
-        df = self.search(query, k=k, mode=mode, **kw)
         out: dict = {}
+        cancelled = threading.Event()
 
         def run():
+            # planning runs Spark jobs too (rewrite, term statistics), so
+            # the whole query runs inside the group and the deadline
             sc.setJobGroup(group, "time-limited search", interruptOnCancel=True)
             try:
-                out["pdf"] = df.toPandas()
+                df = self.search(query, k=k, mode=mode, **kw)
+                if not cancelled.is_set():
+                    out["pdf"] = df.toPandas()
             except Exception as e:  # cancelled jobs surface as exceptions
                 out["err"] = e
 
@@ -1273,8 +1351,10 @@ class SparkSearcher:
         t.start()
         t.join(timeout_s)
         if t.is_alive():
+            # the thread may still be planning: it starts no result job
+            # once cancelled is set, and a job already running is killed
+            cancelled.set()
             sc.cancelJobGroup(group)
-            t.join(30)
             return None, True
         if "err" in out:
             # The deadline never fired and we issued no cancel, so this is a
@@ -1954,30 +2034,28 @@ class SparkSearcher:
                 tuple(SP.SpanTerm(t) for t in terms), slop, ordered
             )
             return self.span_query(node)
-        prows = self._postings.where(F.col("term").isin(sorted(set(terms))))
         seg_meta = self.seg_meta
-        tlist, sl, od = terms, slop, ordered
 
-        def run(key, pdf):
+        def run(pdf):
             # repeated terms, unordered: sequential sweep with repeat
             # reconciliation (NearSpansUnordered "with repeats" semantics)
             doc_base = seg_meta[pdf["segment_id"].iloc[0]]["doc_base"]
             rows = {t: _Row(r) for t, r in ((r["term"], r) for _, r in pdf.iterrows())}
-            if any(t not in rows for t in tlist):
+            if any(t not in rows for t in terms):
                 return pd.DataFrame({"docid": np.zeros(0, np.int64),
                                      "freq": np.zeros(0, np.int64)})
-            ids, _ = min((rows[t] for t in tlist), key=lambda r: r.df).decode_all()
-            for t in set(tlist):
+            ids, _ = min((rows[t] for t in terms), key=lambda r: r.df).decode_all()
+            for t in set(terms):
                 _, tfs = rows[t].lookup(ids)
                 ids = ids[tfs > 0]
                 if len(ids) == 0:
                     return pd.DataFrame({"docid": np.zeros(0, np.int64),
                                          "freq": np.zeros(0, np.int64)})
-            pos_arrays = [rows[t].positions_for(ids) for t in tlist]
+            pos_arrays = [rows[t].positions_for(ids) for t in terms]
             out_ids, out_freqs = [], []
             for j in range(len(ids)):
                 f = SP.span_near_count(
-                    [arrs[j] for arrs in pos_arrays], sl, od, tlist
+                    [arrs[j] for arrs in pos_arrays], slop, ordered, terms
                 )
                 if f > 0:
                     out_ids.append(ids[j] + doc_base)
@@ -1987,11 +2065,9 @@ class SparkSearcher:
                  "freq": np.array(out_freqs, np.int64)}
             )
 
-        return (
-            prows.groupBy("segment_id")
-            .applyInPandas(run, "docid long, freq long")
-            .orderBy("docid")
-        )
+        return self._map_segments(
+            run, sorted(set(terms)), True, "docid long, freq long"
+        ).orderBy("docid")
 
     def span_query(self, node) -> DataFrame:
         """Evaluate a span-algebra query (spans.SpanTerm/Near/Or/Not/First)
@@ -2001,11 +2077,9 @@ class SparkSearcher:
         decode, then the whole segment evaluates in one batched pass."""
         from . import spans as SP
 
-        all_terms = sorted(SP.span_terms(node))
-        prows = self._postings.where(F.col("term").isin(all_terms))
         seg_meta = self.seg_meta
 
-        def run(key, pdf):
+        def run(pdf):
             doc_base = seg_meta[pdf["segment_id"].iloc[0]]["doc_base"]
             rows = {r["term"]: _Row(r) for _, r in pdf.iterrows()}
             posmap = _span_posmap(node, rows)
@@ -2015,11 +2089,9 @@ class SparkSearcher:
                 {"docid": (d + doc_base).astype(np.int64), "freq": c}
             )
 
-        return (
-            prows.groupBy("segment_id")
-            .applyInPandas(run, "docid long, freq long")
-            .orderBy("docid")
-        )
+        return self._map_segments(
+            run, sorted(SP.span_terms(node)), True, "docid long, freq long"
+        ).orderBy("docid")
 
     def span_search(self, node, k: int = 10) -> DataFrame:
         """SpanScorer top-k (spans/SpanScorer.java:48-60): per matching doc
@@ -2037,10 +2109,9 @@ class SparkSearcher:
         wv = bm25.weight_value(idf_sum)
         avgdl = bm25.avg_field_length(self.sum_ttf, self.max_doc)
         cache = bm25.norm_cache(avgdl)
-        prows = self._postings.where(F.col("term").isin(all_terms))
         seg_meta = self.seg_meta
 
-        def run(key, pdf):
+        def run(pdf):
             seg = seg_meta[pdf["segment_id"].iloc[0]]
             doc_base = seg["doc_base"]
             rows = {r["term"]: _Row(r) for _, r in pdf.iterrows()}
@@ -2057,17 +2128,8 @@ class SparkSearcher:
                  "score": sc[sel].astype(np.float32)}
             )
 
-        partial = prows.groupBy("segment_id").applyInPandas(
-            run, "docid long, score float"
-        )
-        topk = partial.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(F.lit(1)).orderBy(F.desc("score"), F.asc("docid"))
-        return (
-            topk.withColumn("rank", F.row_number().over(w))
-            .select("rank", "docid", "score")
-            .orderBy("rank")
+        return self._ranked(
+            self._map_segments(run, all_terms, True, RESULT_SCHEMA), k
         )
 
     # ------------------------------------------------------------------
@@ -2077,23 +2139,8 @@ class SparkSearcher:
     def _read_seg_postings(
         self, seg_dir: str, terms: list[str], need_pos: bool
     ) -> pd.DataFrame:
-        """One segment's postings rows for the given terms, via a direct
-        pyarrow read (term-in filter prunes row groups exactly like the
-        Spark scan's PushedFilters)."""
-        import pyarrow.parquet as pq
-
-        cols = [
-            "segment_id", "term", "df", "ttf", "blocks", "skip_last",
-            "skip_off", "skip_max_tf", "skip_max_norm",
-        ]
-        if need_pos:
-            cols += ["positions", "skip_pos_off"]
-        t = pq.read_table(
-            os.path.join(seg_dir, "postings.parquet"),
-            columns=cols,
-            filters=[("term", "in", terms)],
-        )
-        return t.to_pandas()
+        """The resident scheduler's postings read (the shared reader)."""
+        return _read_postings(seg_dir, terms, need_pos)
 
     def _dictionary_resident(self) -> np.ndarray:
         """Sorted default-field terms dictionary, cached for the searcher's
@@ -2206,61 +2253,18 @@ class SparkSearcher:
         'resident searcher' item)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        q = (parse_query(query, mode, analyzer=self.analyzer)
-             if isinstance(query, str) else query)
-        if min_should_match:
-            q.min_should_match = min_should_match
-        if dismax_tie is not None:
-            q.dismax_tie = dismax_tie
-        if _query_has(q, ("wildcard", "regexp", "fuzzy")):
-            # dictionary rewrites run over the RESIDENT dictionary too —
-            # the whole warm path is Spark-job-free
-            q = self._rewrite_multiterm(q, resident=True)
-            if q is None:
-                return _resident_empty(with_url)
-        if (
-            after is not None or q.min_should_match
-            or q.dismax_tie is not None or _query_has(q, ("bool", "fuzzy"))
-        ):
-            prune = False
-        if not q.clauses:
+        plan = self._plan(
+            query, k, mode, prune, after, min_should_match, fq,
+            dismax_tie=dismax_tie, resident=True,
+        )
+        if plan is None:
             return _resident_empty(with_url)
-        fqq = (parse_query(fq, "AND", analyzer=self.analyzer)
-               if isinstance(fq, str) else fq)
-        if fqq is not None and _query_has(fqq, ("wildcard", "regexp", "fuzzy")):
-            fqq = self._rewrite_multiterm(fqq, resident=True)
-            if fqq is None:
-                return _resident_empty(with_url)
-
-        terms = sorted(
-            set(q.all_terms) | (set(fqq.all_terms) if fqq is not None else set())
-        )
-        stats = self._term_stats_resident(terms)
-        idf_by_term = {
-            t: bm25.idf(stats.get(t, 0), self.max_doc) for t in terms
-        }
-        wv_by_clause = _weights_for(q, idf_by_term)
-        avgdl = bm25.avg_field_length(self.sum_ttf, self.max_doc)
-        cache = bm25.norm_cache(avgdl)
-        for c in q.clauses:
-            if c.required and c.kind not in ("bool", "term_set"):
-                if c.kind == "phrase" and getattr(c, "alts", None):
-                    if any(all(stats.get(t, 0) == 0 for t in sl) for sl in c.alts):
-                        return _resident_empty(with_url)
-                elif any(stats.get(t, 0) == 0 for t in c.terms):
-                    return _resident_empty(with_url)
-        need_pos = _query_has(q, ("phrase",)) or (
-            fqq is not None and _query_has(fqq, ("phrase",))
-        )
 
         def run_seg(seg_dir):
-            pdf = self._read_seg_postings(seg_dir, terms, need_pos)
-            if pdf.empty:
-                return _empty_pdf()
-            return _score_segment(
-                pdf, q, self.seg_meta, wv_by_clause, idf_by_term, cache, k,
-                prune, after, False, fqq, False, None,
-            )
+            # the distributed scheduler's per-segment step (_map_segments)
+            # on a driver thread
+            pdf = self._read_seg_postings(seg_dir, plan.terms, plan.need_pos)
+            return _score_segment(plan, pdf) if len(pdf) else _empty_pdf()
 
         dirs = [m["dir"] for m in self.seg_meta.values()]
         if len(dirs) > 1:
@@ -2377,37 +2381,27 @@ class SparkSearcher:
             )
             for f in set(fields) | set(pf)
         }
-        cols = [
-            "segment_id", "term", "df", "blocks", "skip_last", "skip_off",
-            "skip_max_tf", "skip_max_norm",
-        ]
-        if pf:
-            cols += ["positions", "skip_pos_off"]
-        prows = self._postings.where(F.col("term").isin(all_ns)).select(*cols)
         seg_meta = self.seg_meta
-        tlist, flist, tie_f, kk = terms, fields, np.float32(tie), k
-        ps_slop = int(ps)
+        tie_f, ps_slop = np.float32(tie), int(ps)
 
-        def run(key, pdf):
+        def run(pdf):
             seg = seg_meta[pdf["segment_id"].iloc[0]]
             rows = {r["term"]: _Row(r) for _, r in pdf.iterrows()}
-            if not rows:
-                return _empty_pdf()
             cand = np.unique(
                 np.concatenate([r.decode_all()[0] for r in rows.values()])
             )
             norms_by_f = {
                 f: _read_field_norms(seg["dir"], f, missing_ok=True)[0]
-                for f in set(flist) | set(wv_pf)
+                for f in set(fields) | set(wv_pf)
             }
             n = len(cand)
             total = np.zeros(n, dtype=np.float32)
             matched = np.zeros(n, dtype=bool)
-            for t in tlist:
+            for t in terms:
                 best = np.zeros(n, dtype=np.float32)
                 ssum = np.zeros(n, dtype=np.float32)
                 hit = np.zeros(n, dtype=bool)
-                for f in flist:
+                for f in fields:
                     r = rows.get(ns(f, t))
                     if r is None:
                         continue
@@ -2430,8 +2424,8 @@ class SparkSearcher:
             for f, wvp in wv_pf.items():
                 from .query import Clause as _Cl
 
-                pc = _Cl("phrase", [ns(f, t) for t in tlist],
-                         offsets=list(range(len(tlist))), slop=ps_slop)
+                pc = _Cl("phrase", [ns(f, t) for t in terms],
+                         offsets=list(range(len(terms))), slop=ps_slop)
                 if not _phrase_present(pc, rows):
                     continue
                 ids_p, freqs = _phrase_freqs(pc, rows, cand)
@@ -2446,60 +2440,36 @@ class SparkSearcher:
             cand, total = cand[matched], total[matched]
             if len(cand) == 0:
                 return _empty_pdf()
-            sel = np.lexsort((cand, -total))[:kk]
+            sel = np.lexsort((cand, -total))[:k]
             return pd.DataFrame(
                 {"docid": (cand[sel] + seg["doc_base"]).astype(np.int64),
                  "score": total[sel].astype(np.float32)}
             )
 
-        partial = prows.groupBy("segment_id").applyInPandas(
-            run, "docid long, score float"
-        )
-        topk = partial.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(F.lit(1)).orderBy(F.desc("score"), F.asc("docid"))
-        return (
-            topk.withColumn("rank", F.row_number().over(w))
-            .select("rank", "docid", "score")
-            .orderBy("rank")
+        return self._ranked(
+            self._map_segments(run, all_ns, bool(pf), RESULT_SCHEMA), k
         )
 
     def matching_docids(self, terms: list[str]) -> DataFrame:
         """Constant-score doc-set union of the given terms
         (CONSTANT_SCORE_FILTER_REWRITE): returns distinct docids, sorted."""
         seg_meta = self.seg_meta
-        prows = self._postings.where(F.col("term").isin(list(set(terms)))).select(
-            "segment_id", "term", "df", "blocks", "skip_last", "skip_off"
-        )
 
-        def run(key, pdf):
+        def run(pdf):
             doc_base = seg_meta[pdf["segment_id"].iloc[0]]["doc_base"]
+            ids = [_Row(r).decode_all()[0] for _, r in pdf.iterrows()]
+            return pd.DataFrame(
+                {"docid": (np.unique(np.concatenate(ids)) + doc_base).astype(np.int64)}
+            )
 
-            ids = [
-                codec.decode_blocks(
-                    r["blocks"], int(r["df"]),
-                    np.asarray(r["skip_off"], np.int64),
-                    np.asarray(r["skip_last"], np.int64),
-                )[0]
-                for _, r in pdf.iterrows()
-            ]
-            u = np.unique(np.concatenate(ids)) if ids else np.zeros(0, np.int64)
-            return pd.DataFrame({"docid": (u + doc_base).astype(np.int64)})
-
-        return (
-            prows.groupBy("segment_id")
-            .applyInPandas(run, "docid long")
-            .orderBy("docid")
-        )
+        return self._map_segments(
+            run, sorted(set(terms)), False, "docid long"
+        ).orderBy("docid")
 
 
 def _explain_segment(searcher: "SparkSearcher", q: Query, docid: int) -> dict:
     """Driver-side explain: read the one segment holding ``docid`` with
     pyarrow, decode the query terms' postings, reproduce the scoring."""
-    import pyarrow.parquet as pq
-    import pyarrow.compute as pac
-
     seg = None
     for name, m in searcher.seg_meta.items():
         if m["doc_base"] <= docid < m["doc_base"] + m["max_doc"]:
@@ -2519,10 +2489,7 @@ def _explain_segment(searcher: "SparkSearcher", q: Query, docid: int) -> dict:
         bm25.avg_field_length(searcher.sum_ttf, searcher.max_doc)
     )
 
-    tbl = pq.read_table(
-        os.path.join(seg["dir"], "postings.parquet"),
-        filters=pac.field("term").isin(terms),
-    ).to_pandas()
+    tbl = _read_postings(seg["dir"], terms, _query_has(q, ("phrase",)))
     rows = {r["term"]: _Row(r) for _, r in tbl.iterrows()}
     lid = np.array([local], dtype=np.int64)
 

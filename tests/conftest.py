@@ -42,3 +42,15 @@ def oracle_small(pages_small):
     from lucene_solr_spark.oracle import OracleSearcher
 
     return OracleSearcher(pages_small)
+
+
+def requires_reference(path: str):
+    """Skip mark for differential tests that compile reference sources:
+    they need ``path`` (a file or directory of the reference tree) and a
+    JDK."""
+    if not os.path.exists(path):
+        return pytest.mark.skip(reason=f"reference tree {path} is absent")
+    return pytest.mark.skipif(
+        not (shutil.which("javac") and shutil.which("java")),
+        reason="no JDK for the reference oracle",
+    )

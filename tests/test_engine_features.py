@@ -142,6 +142,27 @@ def test_search_with_timeout(spark, small_index):
     assert not timed_out3 and len(pdf3) == 3
 
 
+def test_search_with_timeout_covers_planning(spark, small_index):
+    """The deadline covers query planning too: a term-statistics step that
+    outlasts the budget times out instead of running before the clock."""
+    import time
+
+    from lucene_solr_spark.search.engine import SparkSearcher
+
+    idx, _ = small_index
+    s = SparkSearcher(spark, idx)
+    stats = s._term_stats
+
+    def slow_stats(terms):
+        time.sleep(3)
+        return stats(terms)
+
+    s._term_stats = slow_stats
+    t0 = time.perf_counter()
+    assert s.search_with_timeout("babe roro", timeout_s=0.5, k=5) == (None, True)
+    assert time.perf_counter() - t0 < 3
+
+
 def test_suggest_and_spellcheck_on_index(spark, small_index, pages_small):
     from lucene_solr_spark.analysis import tokenize_series
     from lucene_solr_spark.search.engine import SparkSearcher
@@ -255,10 +276,17 @@ def test_resident_searcher_bit_identical(spark, small_index):
     """search_resident == search across query shapes: same kernels, pyarrow
     reads instead of Spark jobs, zero-job warm path."""
     from lucene_solr_spark.search.engine import SparkSearcher
+    from lucene_solr_spark.search.query import Clause, Query
 
     idx, _ = small_index
     s = SparkSearcher(spark, idx)
+    # a required expansion whose every term has zero global df
+    zero_set = Query([
+        Clause("term", ["babe"]),
+        Clause("term_set", ["zzqx1", "zzqx2"], required=True),
+    ])
     shapes = [
+        dict(query=zero_set, k=10),
         dict(query="babe roro", k=10),
         dict(query="babe", k=10),
         dict(query='"babe roro"', k=10),
@@ -384,3 +412,65 @@ def test_highlight_qf_fields_matches_single_field(spark, pages_small):
         single = single.sort_values("doc_id").reset_index(drop=True)
         pd.testing.assert_frame_equal(part, single)
     assert (multi[multi["field"] == "title"]["best_start"] <= 1).all()
+
+
+def test_operators_run_one_task_per_segment(spark, small_index, monkeypatch):
+    """Every search operator reaches its kernel through the per-segment
+    scheduler: no grouped-map shuffle in the executed plan, and the
+    scheduler runs exactly one task per segment directory."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    from lucene_solr_spark.search import spans as SP
+    from lucene_solr_spark.search.engine import SparkSearcher
+
+    idx, _ = small_index
+    s = SparkSearcher(spark, idx)
+    searched = []
+    search = SparkSearcher.search
+
+    def spy(self, *a, **kw):
+        searched.append(search(self, *a, **kw))
+        return searched[-1]
+
+    monkeypatch.setattr(SparkSearcher, "search", spy)
+
+    def count():
+        assert s.count("babe roro") > 0
+        return searched[-1]
+
+    node = SP.SpanOr((SP.SpanTerm("babe"), SP.SpanTerm("roro")))
+    ops = {
+        "search": lambda: s.search("babe roro", k=5),
+        "count": count,
+        "matching": lambda: s.matching("babe roro"),
+        "span_query": lambda: s.span_query(node),
+        "span_search": lambda: s.span_search(node, k=5),
+        "edismax": lambda: s.edismax("babe roro", {"text": 1.0}, k=5),
+        "matching_docids": lambda: s.matching_docids(["babe", "roro"]),
+    }
+    for name, op in ops.items():
+        df = op()
+        assert df.collect(), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        assert "MapInPandas" in plan, (name, plan)
+
+    # the most frequent term has postings in every segment, so every
+    # segment's task runs the kernel and reports where it ran
+    top = s.terms(limit=1).collect()[0]["term"]
+
+    def where(pdf):
+        tc = TaskContext.get()
+        return pd.DataFrame({"seg": [pdf["segment_id"].iloc[0]],
+                             "stage": [tc.stageId()],
+                             "part": [tc.partitionId()]})
+
+    got = s._map_segments(
+        where, [top], False, "seg string, stage int, part int"
+    ).toPandas()
+    assert sorted(got["seg"]) == sorted(s.seg_meta)
+    assert got["part"].nunique() == len(s.seg_meta)
+    assert got["stage"].nunique() == 1
+    info = spark.sparkContext.statusTracker().getStageInfo(int(got["stage"][0]))
+    assert info.numTasks == len(s.seg_meta)

@@ -4,11 +4,11 @@ the reference's own hunspell/Dictionary.java + Stemmer.java and
 compares stem lists; the full sweep — all 31 fixture dictionaries x
 case-sensitive/ignore-case, 6390 comparisons — passed 0 mismatches)."""
 
-import shutil
 import subprocess
 import sys
 
-import pytest
+from conftest import requires_reference
+from tools import fuzz_hunspell
 
 from lucene_solr_spark.analysis import analyze_one
 from lucene_solr_spark.analysis.hunspell import (
@@ -73,10 +73,7 @@ def test_analyzer_chain_twins():
     assert toks == [("order", 0), ("ord", 0), ("by", 1), ("valu", 2)]
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@requires_reference(fuzz_hunspell.REF)
 def test_fixture_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_hunspell.py",

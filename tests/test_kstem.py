@@ -3,11 +3,11 @@ compiled en/KStemmer (tools/fuzz_kstem.py; the 15k-word campaign —
 lexicon words, suffixed derivations, doubled consonants, randoms —
 passed byte-identical on the first run)."""
 
-import shutil
 import subprocess
 import sys
 
-import pytest
+from conftest import requires_reference
+from tools import fuzz_kstem
 
 from lucene_solr_spark.analysis import analyze_one
 from lucene_solr_spark.analysis.kstem import kstem
@@ -48,10 +48,7 @@ def test_analyzer_chain():
     assert toks == [("consultation", 1), ("define", 3), ("policy", 4)]
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@requires_reference(fuzz_kstem.REF)
 def test_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_kstem.py", "400"],

@@ -3,11 +3,11 @@ subset vs the compiled MD5/Lookup3/TextProfileSignature
 (tools/fuzz_signature.py; the 5k-line campaign passed byte-identical,
 including the Java-HashMap tie order inside the text profile)."""
 
-import shutil
 import subprocess
 import sys
 
-import pytest
+from conftest import requires_reference
+from tools import fuzz_signature
 
 from lucene_solr_spark.functions.signature import (
     _java_hashmap_order, java_string_hashcode, lookup3_signature,
@@ -66,10 +66,7 @@ def test_lookup3_length_mod3_quirk():
     assert lookup3ycs64("abcd") != lookup3ycs64("abce")
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@requires_reference(fuzz_signature.REF)
 def test_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_signature.py", "300"],

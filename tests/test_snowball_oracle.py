@@ -1,23 +1,19 @@
 """Differential parity: every Python Snowball stemmer vs the REFERENCE
 generated Java programs, compiled from /root/reference and driven over
-stdin (tools/fuzz_snowball.py). Skipped when no JDK is available.
+stdin (tools/fuzz_snowball.py). Skipped without the reference tree or a JDK.
 
 The full campaign (6000 words x 17 languages, seed 20260817) passed
 byte-identical during round 4; this test keeps a smaller always-on
 sample so regressions in any stemmer or shared helper are caught."""
 
-import shutil
 import subprocess
 import sys
 
-import pytest
-
-pytestmark = pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+from conftest import requires_reference
+from tools import fuzz_light, fuzz_snowball
 
 
+@requires_reference(fuzz_snowball.REF)
 def test_all_stemmers_match_reference_programs():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_snowball.py", "400"],
@@ -29,6 +25,7 @@ def test_all_stemmers_match_reference_programs():
     assert len([l for l in lines if l.startswith("OK ")]) == 18, proc.stdout
 
 
+@requires_reference(fuzz_light.REF)
 def test_porter_and_light_packs_match_reference_programs():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_light.py", "400"],
